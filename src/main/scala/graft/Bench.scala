@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line `{"metric":"total","value":N,...}`.
@@ -16,30 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JDK-17 module guard: without `--add-opens java.base/
-    // sun.util.calendar=ALL-UNNAMED` Spark BOOTS fine and almost every
-    // query runs — then date-row decoding throws mid-suite (round 10:
-    // a hand-launched bench ran 299/300 and "failed" one on exactly
-    // this). Exercise the decode path up front and fail fast with the
-    // cure instead of producing a map with a bogus failure.
-    try spark.range(1)
-      .select(org.apache.spark.sql.functions.expr("DATE'2020-01-01'"))
-      .head()
-    catch { case e: Throwable =>
-      System.err.println("[bench] this JVM cannot decode date rows — " +
-        "launch with the --add-opens set from scripts/bench.sh " +
-        s"(root cause: ${e.getMessage})")
-      sys.exit(2)
-    }
+    val spark = LocalSpark()
     // dev-only subset filter (driver leaves it unset): comma-list of
     // query names, for timing one query without the full suite
     val onlyNames = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)

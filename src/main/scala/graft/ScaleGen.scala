@@ -31,14 +31,8 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.envCores
+    val spark = LocalSpark(cpus)
 
     def src(t: String): DataFrame = spark.read.parquet(s"$sfDir/$t.parquet")
     def write(t: String, df: DataFrame): Unit = {
@@ -46,7 +40,7 @@ object ScaleGen {
       // input partitions; at factor>=100 that leaves a 100x-sized table
       // in single-digit partitions — rebalance so generation and every
       // later scan parallelize
-      val out = if (factor >= 20) df.repartition(cpus.toInt * 2) else df
+      val out = if (factor >= 20) df.repartition(cpus * 2) else df
       out.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       println(s"[scalegen] $t: ${spark.read.parquet(s"$outDir/$t.parquet").count()} rows")
     }

@@ -23,9 +23,9 @@ object Confs {
     * skew split, join conversion) never fire there, but its
     * stage-by-stage query stages each run as a separate job — and a
     * tiny per-round plan pays the ~70 ms per-job scheduling floor once
-    * per stage instead of once per action (measured via HnswProfile,
-    * rounds 9–10). Results are identical: AQE re-plans, never
-    * re-scores. */
+    * per stage instead of once per action (measured in rounds 9–10;
+    * BASELINE.md / OPTIMIZATION_r11.md). Results are identical: AQE
+    * re-plans, never re-scores. */
   def withoutAqe[T](spark: SparkSession)(body: => T): T =
     withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
 }

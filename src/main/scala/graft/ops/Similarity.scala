@@ -762,8 +762,8 @@ object Similarity {
     // bit-identical output on the test corpora. The per-round
     // scheduling floors the two-round loop paid (intermediate beam
     // checkpoint + per-round broadcast collects, ~8 jobs/round at
-    // local[32] per HnswProfile) collapse into the single seed
-    // broadcast. Candidate volume is bounded: |entries|·m² rows on
+    // local[32] per BASELINE.md / OPTIMIZATION_r11.md) collapse into
+    // the single seed broadcast. Candidate volume is bounded: |entries|·m² rows on
     // the corpus/layerMod upper sample — the same cells/beam bound
     // argument as the coarse assignment. Duplicate candidates are NOT
     // pre-deduped: topB's collect_set absorbs them (the beam-loop

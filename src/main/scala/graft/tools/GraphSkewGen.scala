@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Hub-skew stress corpus for the graph tier: copies an sf directory
@@ -18,14 +17,7 @@ object GraphSkewGen {
     val (srcDir, outDir) = (args(0), args(1))
     val hotPct = args.lift(2).map(_.toInt).getOrElse(40)
     require(hotPct > 0 && hotPct < 100, s"hotPct in 1..99, got $hotPct")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     // non-orders tables: straight copies (filesystem-level, no rewrite)

@@ -1,15 +1,15 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named queries into a directory —
   * the round-11 deliverable (`plans/r11/<query>_{before,after}.txt`).
   *
   * Usage: PlanDump <outDir> <suffix> <query1,query2,...> [sfDir]
-  * Writes <outDir>/<query>_<suffix>.txt per query. Uses local[32] and
-  * the bench's shuffle-partition setting so the dumped plan is the one
-  * the bench actually executes (AQE initial plan; the formatted output
-  * carries Exchange placement, join strategy, PushedFilters, ReadSchema).
+  * Writes <outDir>/<query>_<suffix>.txt per query. Uses the bench's
+  * session ([[graft.LocalSpark]]) so the dumped plan is the one the bench
+  * actually executes (AQE initial plan; the formatted output carries
+  * Exchange placement, join strategy, PushedFilters, ReadSchema). The
+  * committed plans/r11 dumps were made with SPARK_GRAFT_CPUS=32.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,15 +17,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sf = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sf)

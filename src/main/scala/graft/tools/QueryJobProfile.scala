@@ -1,58 +1,74 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
-/** Dev-only: wall + deterministic JOB COUNT for any registered query —
-  * the generic form of [[GraphLoopProfile]]'s discriminator. On a host
-  * whose wall clock has a documented heavy-tailed noise distribution
-  * (BASELINE.md round-11 adjudication), the scheduler job count is the
-  * reproducible signal for scheduling-floor optimizations (checkpoint
-  * fuses, broadcast-collect elimination); wall is corroboration only.
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graft.ListenerBridge
+
+/** Dev-only: wall + deterministic JOB COUNT for any registered query.
+  * On a host whose wall clock has a documented heavy-tailed noise
+  * distribution (BASELINE.md round-11 adjudication), the scheduler job
+  * count is the reproducible signal for scheduling-floor optimizations
+  * (checkpoint fuses, broadcast-collect elimination); wall is
+  * corroboration only.
   *
-  * Usage: QueryJobProfile <query1,query2,...> [sfDir] — prints one
-  * line per query per pass (warmup + 2 timed).
+  * Each query is measured in two parts: `build`, the jobs that run while
+  * `SparkEntry.queries(n)` constructs the DataFrame (eager
+  * `localCheckpoint` loop actions, broadcast collects), and `action`, the
+  * final `noop` write. Iterative operators spend most of their wall in
+  * the build part.
+  *
+  * Usage: SPARK_GRAFT_CPUS=N QueryJobProfile <query1,query2,...> [sfDir]
+  * — prints one line per query per pass (warmup + 2 timed).
   */
 object QueryJobProfile {
+  private final class Counters {
+    val jobs, stages, tasks, cpuMs = new AtomicLong()
+    def reset(): Unit = Seq(jobs, stages, tasks, cpuMs).foreach(_.set(0))
+    override def toString: String =
+      f"jobs=${jobs.get}%4d stages=${stages.get}%4d tasks=${tasks.get}%5d" +
+        f" cpu=${cpuMs.get}%6dms"
+  }
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val jobN = new java.util.concurrent.atomic.AtomicLong()
-    val taskN = new java.util.concurrent.atomic.AtomicLong()
-    val stageN = new java.util.concurrent.atomic.AtomicLong()
-    val cpuMs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobN.incrementAndGet()
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          taskN.incrementAndGet()
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stageN.incrementAndGet()
-          cpuMs.addAndGet(e.stageInfo.taskMetrics.executorCpuTime / 1000000)
-        }
-      })
+    val spark = graft.LocalSpark()
+    // the listener feeds whichever counter set is current
+    @volatile var cur = new Counters
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        cur.jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        cur.tasks.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        cur.stages.incrementAndGet()
+        cur.cpuMs.addAndGet(e.stageInfo.taskMetrics.executorCpuTime / 1000000)
+      }
+    })
+    val (build, action) = (new Counters, new Counters)
+    // switch counters only once the listener bus has drained the
+    // previous part's events
+    def measure[T](c: Counters)(f: => T): (T, Double) = {
+      ListenerBridge.drain(spark.sparkContext)
+      c.reset(); cur = c
+      val t0 = System.nanoTime()
+      val r = f
+      val dt = (System.nanoTime() - t0) / 1e9
+      ListenerBridge.drain(spark.sparkContext)
+      (r, dt)
+    }
     for (pass <- Seq("warmup", "timed1", "timed2")) {
       names.foreach { n =>
         spark.sparkContext.setJobDescription(s"$n ($pass)")
-        jobN.set(0); taskN.set(0); stageN.set(0); cpuMs.set(0)
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200) // listener bus drain
-        println(f"[$pass] $n%-28s ${dt}%7.2fs jobs=${jobN.get}%4d" +
-          f" stages=${stageN.get}%4d tasks=${taskN.get}%5d cpu=${cpuMs.get}%6dms")
+        val (df, buildS) = measure(build)(graft.SparkEntry.queries(n)(spark, sfDir))
+        val (_, actionS) = measure(action)(
+          df.write.format("noop").mode("overwrite").save())
+        println(f"[$pass] $n%-28s ${buildS + actionS}%7.2fs" +
+          f" jobs=${build.jobs.get + action.jobs.get}%4d")
+        println(f"  build  ${buildS}%7.2fs $build")
+        println(f"  action ${actionS}%7.2fs $action")
         spark.catalog.clearCache()
       }
     }

@@ -23,3 +23,11 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
+
+/** Blocks until every posted listener event has been delivered
+  * (SparkContext.listenerBus is private[spark]) — lets a profiler read
+  * exact per-action counters without sleeping. */
+object ListenerBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+}
